@@ -71,17 +71,19 @@ def main() -> None:
         assert pipeline.explode_frames(fdf).count() == n_frames
         best_framing = max(best_framing, n_frames / (time.perf_counter() - t0))
 
-    # D1 front door: acked throughput through a live TCP session
-    # (register-type handshake + varint-framed batches + per-frame decode
-    # validation + durable parquet landing; reference ingest_service.go).
+    # D1 front door: acked throughput through a live gRPC Streaming RPC
+    # (register-type handshake + write batches in h2 DATA frames +
+    # per-frame decode validation + durable parquet landing; reference
+    # ingest_service.go).
     import os
     import tempfile
 
     from bristle_spark.ingest import service as svc
+    from bristle_spark.ingest.grpc_transport import GrpcIngestClient, GrpcIngestService
     from bristle_spark.ingest.server import IngestServer
 
-    sock_rows = min(n, 100_000)
-    sock_batch = 1_000
+    acked_rows = min(n, 100_000)
+    acked_batch = 1_000
     with tempfile.TemporaryDirectory() as root:
         cfg = {
             "tables": [
@@ -114,17 +116,17 @@ def main() -> None:
         with open(cfg_path, "w") as fh:
             json.dump(cfg, fh)
         server = IngestServer(spark, cfg_path, os.path.join(root, "data"))
-        with svc.IngestSocketService(server) as sk:
-            with svc.IngestSocketClient("127.0.0.1", sk.port) as client:
+        with GrpcIngestService(server) as door:
+            with GrpcIngestClient("127.0.0.1", door.port) as client:
                 tid = client.register_type(binding.message_name)
                 t0 = time.perf_counter()
-                for off in range(0, sock_rows, sock_batch):
-                    r = client.write_batch(bodies[off : off + sock_batch], type_id=tid)
+                for off in range(0, acked_rows, acked_batch):
+                    r = client.write_batch(bodies[off : off + acked_batch], type_id=tid)
                     assert r == svc.OK
-                socket_rps = sock_rows / (time.perf_counter() - t0)
+                grpc_rps = acked_rows / (time.perf_counter() - t0)
 
         # D14/D16 producer path: protojson lines -> wire encode -> live
-        # socket with the client batcher (ingest/forwarder.py)
+        # gRPC session with the client batcher (ingest/forwarder.py)
         from bristle_spark.ingest.forwarder import forward_json_lines
 
         fwd_rows = min(n, 100_000)
@@ -140,10 +142,10 @@ def main() -> None:
             )
             for i in range(fwd_rows)
         ]
-        with svc.IngestSocketService(server) as sk:
+        with GrpcIngestService(server) as door:
             t0 = time.perf_counter()
             stats = forward_json_lines(
-                lines, "127.0.0.1", sk.port, binding, max_buffer=sock_batch
+                lines, "127.0.0.1", door.port, binding, max_buffer=acked_batch
             )
             forwarder_rps = stats.n_sent / (time.perf_counter() - t0)
         assert stats.n_sent == fwd_rows, stats
@@ -156,7 +158,7 @@ def main() -> None:
                 "unit": "rows/s",
                 "rows": n,
                 "framing_frames_per_s": round(best_framing),
-                "socket_acked_rows_per_s": round(socket_rps),
+                "grpc_acked_rows_per_s": round(grpc_rps),
                 "forwarder_json_rows_per_s": round(forwarder_rps),
             }
         )

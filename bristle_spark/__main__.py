@@ -64,7 +64,7 @@ def cmd_forward_json(args: argparse.Namespace) -> int:
     if args.connect:
         # live producer mode (reference cmd/bristle-forward-json): read
         # lines driver-side, encode protojson -> wire, stream batches to
-        # the TCP front door with the client batcher (D14), acked.
+        # the gRPC front door with the client batcher (D14), acked.
         from bristle_spark.ingest.forwarder import forward_json_lines
 
         binding = registry_from_json(args.config).for_type(args.type)
@@ -96,17 +96,15 @@ def cmd_forward_json(args: argparse.Namespace) -> int:
 def cmd_serve(args: argparse.Namespace) -> int:
     """Run the reload-capable ingest server (reference server binary:
     config -> registries -> writer group; SIGHUP reload analog via
-    --reload-between-pumps for scripted testing). With --listen the
-    wire-protocol TCP front door accepts client sessions between pump
-    cycles (reference ingest_service.go:63-74); --grpc-listen mounts
-    the HTTP/2-gRPC front door (both public RPCs) the same way."""
+    --reload-between-pumps for scripted testing). With --grpc-listen the
+    HTTP/2-gRPC front door (both public RPCs) accepts client sessions
+    between pump cycles (reference ingest_service.go:63-74)."""
     import json as _json
 
     from bristle_spark.ingest.server import IngestServer
 
     spark = _spark("bristle-serve")
     server = IngestServer(spark, args.config, args.data_root)
-    service = None
     # D18: /metrics + debug endpoints when the config has a debugging
     # block (debug_server.go:32-47 analog)
     from bristle_spark.ingest.metrics import debug_server_from_config
@@ -116,14 +114,8 @@ def cmd_serve(args: argparse.Namespace) -> int:
         print(
             _json.dumps({"debug": f"{debug.host}:{debug.port}"}), file=sys.stderr
         )
-    if args.listen:
-        from bristle_spark.ingest.service import IngestSocketService
-
-        host, _, port = args.listen.rpartition(":")
-        service = IngestSocketService(server, host or "127.0.0.1", int(port)).start()
-        print(_json.dumps({"listening": f"{service.host}:{service.port}"}), file=sys.stderr)
     grpc_service = None
-    if getattr(args, "grpc_listen", None):
+    if args.grpc_listen:
         from bristle_spark.ingest.grpc_transport import GrpcIngestService
 
         host, _, port = args.grpc_listen.rpartition(":")
@@ -147,8 +139,6 @@ def cmd_serve(args: argparse.Namespace) -> int:
                 print(f"[serve] compacted: {merged}", file=sys.stderr)
             print(_json.dumps({"pump": i, "batches": stats}))
     finally:
-        if service is not None:
-            service.stop()
         if grpc_service is not None:
             grpc_service.stop()
         if debug is not None:
@@ -220,7 +210,7 @@ def main(argv: list[str] | None = None) -> int:
     sp = sub.add_parser("forward-json", help="JSON-lines -> sink (D16)")
     add_ingest_common(sp)
     sp.add_argument("--connect", default=None,
-                    help="HOST:PORT of a live front door (producer mode)")
+                    help="HOST:PORT of a live gRPC front door (producer mode)")
     sp.add_argument("--max-buffer", type=int, default=100_000,
                     help="client batcher flush threshold (D14)")
     sp.set_defaults(fn=cmd_forward_json)
@@ -236,7 +226,6 @@ def main(argv: list[str] | None = None) -> int:
     sp.add_argument("--data-root", required=True)
     sp.add_argument("--pumps", type=int, default=1)
     sp.add_argument("--reload-between-pumps", action="store_true")
-    sp.add_argument("--listen", default=None, help="HOST:PORT for the wire-protocol TCP front door")
     sp.add_argument("--grpc-listen", default=None,
                     help="HOST:PORT for the HTTP/2-gRPC front door (Streaming + WriteBatch)")
     sp.add_argument("--pump-interval", type=float, default=0.0, help="seconds between pump cycles")

@@ -7,9 +7,9 @@ every 5 s or at 100,000 buffered messages (reference
 cmd/bristle-forward-json/main.go:25-46,153-157; the D14 client batcher).
 Malformed lines are logged and skipped (main.go:34-38).
 
-This module is that producer process for the TCP front door
-(service.py): deliberately plain driver-side Python — it IS the client
-binary, not a Spark job — emitting byte-identical wire bodies to what
+This module is that producer process for the gRPC front door
+(grpc_transport.py): deliberately plain driver-side Python — it IS the
+client binary, not a Spark job — emitting byte-identical wire bodies to what
 ``protojson.Unmarshal`` + ``proto.Marshal`` would put on the stream
 (verified against the repo's own decode path in
 test_forwarder.py::test_encoded_record_roundtrips). The file-based
@@ -26,9 +26,10 @@ from dataclasses import dataclass, field
 from datetime import datetime, timezone
 from typing import Any
 
-from bristle_spark.ingest.bindings import FieldSpec, MessageBinding
-from bristle_spark.ingest.service import FULL, IngestSocketClient, OK, RESULT_NAMES
 from bristle_spark.ingest import wire
+from bristle_spark.ingest.bindings import MessageBinding
+from bristle_spark.ingest.grpc_transport import GrpcIngestClient
+from bristle_spark.ingest.service import FULL, OK, RESULT_NAMES
 
 # reference client defaults (cmd/bristle-forward-json/main.go:153-157)
 DEFAULT_MAX_BUFFER = 100_000
@@ -132,7 +133,7 @@ class JsonForwarder:
 
     def __init__(
         self,
-        client: IngestSocketClient,
+        client: GrpcIngestClient,
         binding: MessageBinding,
         max_buffer: int = DEFAULT_MAX_BUFFER,
         type_name: str | None = None,
@@ -192,7 +193,7 @@ def forward_json_lines(
 ) -> ForwardStats:
     """Forward an iterable of JSON lines to a live front door; returns
     the accounting. One connection, one registered type, acked batches."""
-    with IngestSocketClient(host, port) as client:
+    with GrpcIngestClient(host, port) as client:
         fw = JsonForwarder(client, binding, max_buffer=max_buffer, type_name=type_name)
         for line in lines:
             if line.strip():

@@ -18,12 +18,12 @@ in pure stdlib (prometheus_client is env-blocked like everything else):
 - ``/debug/threads`` — a live all-threads stack dump, the Python
   analog of pprof's goroutine profile (``/debug/pprof/goroutine?debug=2``)
 
-Beyond the interceptor parity, the front doors record what an operator
+Beyond the interceptor parity, the front door records what an operator
 of THIS engine actually needs (the grpc-prometheus labels say nothing
 about batch outcomes):
 
 - ``bristle_ingest_batches_total{transport,result}`` — acks by
-  BatchResult name across socket / grpc-streaming / grpc-unary
+  BatchResult name per RPC shape, grpc-streaming / grpc-unary
 - ``bristle_ingest_rows_total{table}`` / ``bristle_ingest_payload_bytes_total{table}``
   — durably landed rows and payload bytes per sink table
 - ``bristle_rpc_started_total{method}`` / ``bristle_rpc_handled_total{method,code}``

@@ -1,17 +1,15 @@
-"""Network ingest front door: the reference's BristleIngestService
-bidirectional streaming protocol served over a plain TCP socket.
+"""The reference's BristleIngestService protocol, transport-agnostic:
+envelope codec, BatchResult codes, the shared validate-and-land batch
+path and client-side Backoff handling. The HTTP/2-gRPC front door
+(grpc_transport.py) serves it on the network.
 
 The reference registers a gRPC service (ingest_service.go:63-65) whose
 ``Streaming`` RPC (ingest_service.go:184-234) carries
 ``StreamingClientMessage`` / ``StreamingServerMessage`` protos:
 register-message-type handshakes, varint-framed write batches, and
-per-batch ``BatchResult`` acks (bristle.proto, service + enum). This
-container has no grpcio, so the same protobuf envelope stream runs over
-a raw TCP connection with standard varint length prefixes between
-envelopes — every proto byte on the wire is identical to what the gRPC
-stream would carry; only the HTTP/2 transport is replaced. The envelope
-codec is the repo's own spec-driven wire module (wire.py), the same one
-the decode path uses.
+per-batch ``BatchResult`` acks (bristle.proto, service + enum). The
+envelope codec is the repo's own spec-driven wire module (wire.py), the
+same one the decode path uses.
 
 Session semantics mirror ingest_service.go:
 
@@ -30,30 +28,19 @@ Session semantics mirror ingest_service.go:
 
 Where the reference acks after writing rows into an in-memory buffer
 that a ticker flushes to ClickHouse (best-effort: a failed flush drops
-the batch), this front door acks after landing the validated batch as a
-durable payload parquet file in the bound table's landing zone; the
+the batch), ``process_batch`` acks after landing the validated batch as
+a durable payload parquet file in the bound table's landing zone; the
 checkpointed Structured Streaming writer (server.py / ingest_stream.py)
 then drains it exactly-once into the sink. TRANSCODE_ERR cannot occur
 per-row here because bindings validate eagerly at bind time
 (bindings.py, reference clickhouse_table.go:204-226); DECODE_ERR is
 checked frame-by-frame before the ack.
-
-100 TB shape: the listener is a thin, stateless ingress — it validates
-and lands files, nothing else — so horizontal scale is N processes
-behind a load balancer appending to one landing zone (an object-store
-prefix in production), with Spark draining the zone continuously. The
-heavy work (decode at scale, transcode, sink) stays in the distributed
-streaming job, not in the socket handler.
 """
 
 from __future__ import annotations
 
-import io
 import os
-import socket
-import threading
 import uuid
-from concurrent.futures import ThreadPoolExecutor
 
 from bristle_spark.ingest import wire
 
@@ -259,228 +246,7 @@ def _decode_client_message(buf: bytes) -> tuple[str, dict]:
     raise ValueError("empty StreamingClientMessage")
 
 
-# --------------------------------------------------------- socket framing
-
-
-def _read_varint(sock_file: io.BufferedReader) -> int | None:
-    """One varint off the stream; None on clean EOF at a boundary."""
-    result = 0
-    shift = 0
-    first = True
-    while True:
-        b = sock_file.read(1)
-        if not b:
-            if first:
-                return None
-            raise ConnectionError("EOF mid-varint")
-        first = False
-        result |= (b[0] & 0x7F) << shift
-        if not (b[0] & 0x80):
-            return result
-        shift += 7
-        if shift >= 70:
-            raise ValueError("malformed varint")
-
-
-# largest envelope the socket front door will buffer: far above any
-# legitimate WriteBatch (max_batch_len bounds rows, not bytes, so this
-# is the byte-side backstop), far below a declared-length memory bomb
-MAX_ENVELOPE = 64 * 1024 * 1024
-
-
-def read_envelope(sock_file: io.BufferedReader) -> bytes | None:
-    length = _read_varint(sock_file)
-    if length is None:
-        return None
-    if length > MAX_ENVELOPE:
-        # reject on the PREFIX — the read(length) below would otherwise
-        # allocate toward whatever the peer declared
-        raise ValueError(f"envelope length {length} exceeds {MAX_ENVELOPE}")
-    data = sock_file.read(length)
-    if len(data) != length:
-        raise ConnectionError("EOF mid-envelope")
-    return data
-
-
-def frame_envelope(payload: bytes) -> bytes:
-    return wire.encode_varint(len(payload)) + payload
-
-
-# ------------------------------------------------------------- the server
-
-
-class _Session:
-    """Per-connection state (StreamingClientSession analog,
-    ingest_service.go:236-251)."""
-
-    def __init__(self, conn: socket.socket, max_in_flight: int) -> None:
-        self.conn = conn
-        self.send_lock = threading.Lock()
-        self.sem = threading.Semaphore(max_in_flight)
-        self.type_ids: dict[int, str] = {}
-        self.next_type_id = 0
-
-    def send(self, envelope: bytes) -> None:
-        with self.send_lock:
-            self.conn.sendall(frame_envelope(envelope))
-
-    def send_result(self, batch_id: int, result: int) -> None:
-        self.send(_encode_batch_result(batch_id, result))
-
-
-class IngestSocketService:
-    """TCP front door bound to an IngestServer's binding registry and
-    payload landing zones."""
-
-    def __init__(
-        self,
-        server,  # ingest.server.IngestServer
-        host: str = "127.0.0.1",
-        port: int = 0,
-        max_in_flight: int = 12,  # reference NewStreamingClientSession(stream, 12)
-        max_batch_len: int = 10_000,
-        backoff_ms: int = 0,
-    ) -> None:
-        self.server = server
-        self.host = host
-        self.max_in_flight = max_in_flight
-        self.max_batch_len = max_batch_len
-        # when > 0: an admission rejection also sends a Backoff advisory
-        # (bristle.proto:96-99 — declared-only in the reference server;
-        # the reference *client* honors it, client/client.go:128-136)
-        self.backoff_ms = backoff_ms
-        self._sock = socket.socket(socket.AF_INET, socket.SOCK_STREAM)
-        self._sock.setsockopt(socket.SOL_SOCKET, socket.SO_REUSEADDR, 1)
-        self._sock.bind((host, port))
-        self.port = self._sock.getsockname()[1]
-        self._stop = threading.Event()
-        self._accept_thread: threading.Thread | None = None
-        self._pool = ThreadPoolExecutor(max_workers=max(1, max_in_flight))
-
-    # -- lifecycle
-
-    def start(self) -> "IngestSocketService":
-        self._sock.listen()
-        self._accept_thread = threading.Thread(target=self._accept_loop, daemon=True)
-        self._accept_thread.start()
-        return self
-
-    def stop(self) -> None:
-        self._stop.set()
-        try:
-            self._sock.close()
-        except OSError:
-            pass
-        self._pool.shutdown(wait=True)
-
-    def __enter__(self) -> "IngestSocketService":
-        return self.start()
-
-    def __exit__(self, *exc) -> None:
-        self.stop()
-
-    # -- connection handling
-
-    def _accept_loop(self) -> None:
-        import time as _time
-
-        while not self._stop.is_set():
-            try:
-                conn, _addr = self._sock.accept()
-            except OSError:
-                if self._stop.is_set():
-                    return  # listener closed by stop()
-                # transient accept failure (e.g. EMFILE): back off and
-                # keep serving — returning here would leave the port
-                # bound but dead, hanging every future client
-                _time.sleep(0.05)
-                continue
-            threading.Thread(
-                target=self._serve_connection, args=(conn,), daemon=True
-            ).start()
-
-    def _serve_connection(self, conn: socket.socket) -> None:
-        session = _Session(conn, self.max_in_flight)
-        try:
-            with conn, conn.makefile("rb") as rf:
-                while True:
-                    envelope = read_envelope(rf)
-                    if envelope is None:
-                        return  # io.EOF -> clean session end
-                    kind, body = _decode_client_message(envelope)
-                    if kind == "register_message_type":
-                        if body["descriptor"]:
-                            return  # ErrUnsupported (ingest_service.go:199-202)
-                        session.next_type_id += 1
-                        session.type_ids[session.next_type_id] = body["type"]
-                        session.send(_encode_identify(body["type"], session.next_type_id))
-                    elif kind == "write_batch":
-                        if not session.sem.acquire(blocking=False):
-                            # advisory FIRST so a synchronous client has
-                            # noted it by the time the rejection ack
-                            # unblocks its send loop
-                            if self.backoff_ms > 0:
-                                import time as _t
-
-                                name = body["type_name"] or session.type_ids.get(
-                                    body["type_id"]
-                                )
-                                session.send(
-                                    encode_backoff(
-                                        int(_t.time() * 1000) + self.backoff_ms,
-                                        [name] if name else [],
-                                    )
-                                )
-                            session.send_result(body["id"], TOO_MANY_IN_FLIGHT_BATCHES)
-                            from bristle_spark.ingest import metrics
-
-                            metrics.BATCHES.inc(
-                                "socket",
-                                RESULT_NAMES[TOO_MANY_IN_FLIGHT_BATCHES],
-                            )
-                            continue
-                        self._pool.submit(self._write_batch, session, body)
-                    elif kind == "update_default":
-                        return  # ErrUnsupported (ingest_service.go:228-230)
-        except (ConnectionError, ValueError, OSError, IndexError):
-            # IndexError: a truncated varint inside a client envelope
-            # (decode_varint reads past the buffer) — same malformed-
-            # stream class as ValueError
-            return  # malformed stream / client gone: drop the session
-        except RuntimeError:
-            # pool.submit after stop() shut the executor — a teardown
-            # race when a session is mid-envelope; anything else is a
-            # real bug and must surface
-            if self._stop.is_set():
-                return
-            raise
-
-    # -- the write path (writeStreamingBatch analog)
-
-    def _write_batch(self, session: _Session, batch: dict) -> None:
-        try:
-            result = self._process_batch(session, batch)
-        except Exception:
-            # decode failures are returned explicitly by _process_batch;
-            # anything raising here is SERVER-side (landing I/O, disk
-            # full) — ack FULL, the protocol's write-failure result, so
-            # clients know the data was valid and a retry can succeed
-            # (DECODE_ERR would mislabel it as permanently malformed)
-            result = FULL
-        finally:
-            session.sem.release()
-        from bristle_spark.ingest import metrics
-
-        metrics.BATCHES.inc("socket", RESULT_NAMES[result])
-        try:
-            session.send_result(batch["id"], result)
-        except OSError:
-            pass  # client hung up before the ack
-
-    def _process_batch(self, session: _Session, batch: dict) -> int:
-        return process_batch(
-            self.server, session.type_ids, batch, self.max_batch_len
-        )
+# ---------------------------------------------------- the batch path
 
 
 def process_batch(
@@ -488,7 +254,7 @@ def process_batch(
 ) -> int:
     """Validate one write_batch against the server's binding registry
     and durably land it; returns the BatchResult. Transport-agnostic —
-    shared by the TCP front door and the HTTP/2-gRPC transport
+    shared by the gRPC ``Streaming`` and unary ``WriteBatch`` RPCs
     (grpc_transport.py), so both speak byte-identical ack semantics."""
     if batch["type_id"] is not None and batch["type_name"] is None:
         type_name = type_ids.get(batch["type_id"])
@@ -538,7 +304,7 @@ def land_payload(server, binding, type_name: str, bodies: list[bytes]) -> None:
             "body": pa.array(bodies, pa.binary()),
         }
     )
-    name = f"socket_{uuid.uuid4().hex}.parquet"
+    name = f"batch_{uuid.uuid4().hex}.parquet"
     tmp = os.path.join(payload_dir, f".{name}.tmp")
     pq.write_table(table, tmp)
     os.replace(tmp, os.path.join(payload_dir, name))
@@ -550,7 +316,7 @@ def land_payload(server, binding, type_name: str, bodies: list[bytes]) -> None:
     metrics.PAYLOAD_BYTES.inc(binding.sink_table, by=sum(len(b) for b in bodies))
 
 
-# ------------------------------------------------------------- the client
+# ------------------------------------------------------ client backoff
 
 
 class ClientBackoff:
@@ -592,75 +358,3 @@ class ClientBackoff:
         if delay > 0.0:
             time.sleep(delay)
         return delay
-
-
-class IngestSocketClient:
-    """Minimal synchronous client (the reference client library's role,
-    client/client.go): register types for short ids, send write batches,
-    collect acks, and defer sends on server Backoff advisories. Results
-    may arrive out of order; responses are correlated by batch id."""
-
-    def __init__(self, host: str, port: int, timeout: float = 30.0) -> None:
-        self.conn = socket.create_connection((host, port), timeout=timeout)
-        self._rf = self.conn.makefile("rb")
-        self._next_batch = 0
-        self._results: dict[int, int] = {}
-        self._type_names: dict[int, str] = {}
-        self.backoff = ClientBackoff()
-
-    def close(self) -> None:
-        try:
-            self._rf.close()
-        finally:
-            self.conn.close()
-
-    def __enter__(self) -> "IngestSocketClient":
-        return self
-
-    def __exit__(self, *exc) -> None:
-        self.close()
-
-    def _send(self, envelope: bytes) -> None:
-        self.conn.sendall(frame_envelope(envelope))
-
-    def _recv(self) -> tuple[str, dict]:
-        envelope = read_envelope(self._rf)
-        if envelope is None:
-            raise ConnectionError("server closed the session")
-        return decode_server_message(envelope)
-
-    def register_type(self, type_name: str) -> int:
-        self._send(encode_register_type(type_name))
-        while True:
-            kind, body = self._recv()
-            if kind == "identify_message_type" and body["type"] == type_name:
-                self._type_names[body["id"]] = body["type"]
-                return body["id"]
-            if kind == "write_batch_result":  # late ack for an async batch
-                self._results[body["id"]] = body["result"]
-            elif kind == "backoff":
-                self.backoff.note(body)
-
-    def write_batch(
-        self,
-        bodies: list[bytes],
-        type_name: str | None = None,
-        type_id: int | None = None,
-    ) -> int:
-        """Send one batch and block for its ack; returns the BatchResult.
-        Defers the send while a server Backoff advisory covering this
-        type is in force (client/client.go:158-164 intended behavior)."""
-        self.backoff.wait(type_name or self._type_names.get(type_id))
-        self._next_batch += 1
-        batch_id = self._next_batch
-        self._send(encode_write_batch(batch_id, bodies, type_name, type_id))
-        while batch_id not in self._results:
-            kind, body = self._recv()
-            if kind == "write_batch_result":
-                self._results[body["id"]] = body["result"]
-            elif kind == "backoff":
-                self.backoff.note(body)
-        return self._results.pop(batch_id)
-
-    def update_default(self, type_name: str, default: bytes = b"") -> None:
-        self._send(encode_update_default(type_name, default))

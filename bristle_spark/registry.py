@@ -10,6 +10,11 @@ Every implemented operator registers a ``QuerySpec``:
 
 from __future__ import annotations
 
+import functools
+import glob
+import json
+import os
+import re
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -42,122 +47,62 @@ def register(name: str, oracle: str | None = None, group: str = "") -> Callable[
 
 
 # The driver's correctness harness grades the FIRST 50 entries of
-# ``queries()`` in iteration order.  Round-11 rotation (VERDICT r10 ask
-# #1), policy codified in tests/test_driver_window.py: (1) keys with NO
+# ``queries()`` in iteration order.  ``driver_priority()`` derives that
+# window from the committed CORRECTNESS_r*.json history with the policy
+# tests/test_driver_window.py encodes: (1) oracle-backed keys with NO
 # driver row ever lead the window, (2) then keys whose query plan
 # changed after their last driver grade, (3) then the window drains
-# strictly oldest-first over the oracle-backed registry (computed from
-# the committed CORRECTNESS_r*.json history).  Everything rotated out
+# oldest-first over the oracle-backed registry (oldest last grade
+# first, ties in registration order).  Every key outside the window
 # keeps local oracle-parity coverage (test_oracle_parity.py at
-# sf0.001/0.01/0.1, scripts/verify_all.py every round).
+# sf0.001/0.01/0.1, scripts/verify_all.py).
 
-# keys whose query function was touched in THIS round after their last
-# driver grade — the rotation policy forces them into the next window.
-# Round 16 (optimization round): every ORACLE-BACKED key whose QUERY
-# PLAN changed this round (the rows-only l_pagerank and
-# l_quality_classifier_train also changed, but rows-only keys never
-# hold window slots — their trajectories are pinned by
-# tests/test_pagerank.py and tests/test_logreg.py) —
-# the pair-expansion consumers (graph and
-# dedup overlap families), the _probe_scores_arrow kernel consumers
-# (ANN eval harnesses, matryoshka, MRR, list balance), the one-exchange
-# logreg rounds, the trigram classifier's struct-min argmax (and its
-# two oracle composites), and the codegen ipv6 re-parse.  The
-# _pq_packed_key refactor is NOT plan-changed (byte-identical
-# expression trees, the r15 shared-epoch precedent).
-PLAN_CHANGED_KEYS: tuple[str, ...] = (
-    "l_graph_triangles",
-    "l_graph_assortativity",
-    "l_dedup_ngram_jaccard",
-    "l_dedup_containment",
-    "l_source_overlap",
-    "l_contamination_ngram",
-    "l_char_ngram_lang_id",
-    "l_lang_confusion",
-    "l_lang_id_eval",
-    "l_knn_eval",
-    "l_ann_recall_eval",
-    "l_ndcg_eval",
-    "l_matryoshka_eval",
-    "l_retrieval_mrr",
-    "l_ann_list_balance",
-    "t_ipv6_codec",
-)
+DRIVER_WINDOW = 50
 
-DRIVER_PRIORITY: tuple[str, ...] = (
-    # --- (1) never driver-graded: none (the r15 additions were all
-    # graded in CORRECTNESS_r15) ---
-    # --- (2) plan-changed after their last grade (PLAN_CHANGED_KEYS) ---
-    "l_graph_triangles",
-    "l_graph_assortativity",
-    "l_dedup_ngram_jaccard",
-    "l_dedup_containment",
-    "l_source_overlap",
-    "l_contamination_ngram",
-    "l_char_ngram_lang_id",
-    "l_lang_confusion",
-    "l_lang_id_eval",
-    "l_knn_eval",
-    "l_ann_recall_eval",
-    "l_ndcg_eval",
-    "l_matryoshka_eval",
-    "l_retrieval_mrr",
-    "l_ann_list_balance",
-    "t_ipv6_codec",
-    # --- (3) oldest-first drain: 34 of the r9-cohort oracle-backed
-    # keys (ties within a cohort may drain in any order) ---
-    "l_cluster_size_histogram",
-    "l_dedup_sorted_neighborhood",
-    "l_edit_distance_dedup",
-    "l_ks_test",
-    "l_minhash_error",
-    "l_poisson_bootstrap",
-    "l_rank_fusion",
-    "l_text_stats",
-    "l_uncertainty_sample",
-    "l_vocab_growth",
-    "r_benford",
-    "r_bitmap_distinct",
-    "r_cusum_changepoint",
-    "r_gini",
-    "r_hash_agg",
-    "r_incremental_rollup",
-    "r_join_broadcast",
-    "r_market_basket",
-    "r_markov_transitions",
-    "r_mv_late_update",
-    "r_ols_by_group",
-    "r_pareto_share",
-    "r_rollup",
-    "r_sequence_match",
-    "r_set_ops",
-    "r_sliding_distinct",
-    "r_sort_limit_topk",
-    "r_theil_sen",
-    "r_time_weighted_avg",
-    "r_top_paths",
-    "r_ttl_rollup",
-    "r_tumbling_window",
-    "r_weighted_median",
-    "r_welch_ttest",
-)
+# keys whose query function changed after their last driver grade —
+# the policy forces them into the next window.  Empty: every key
+# changed so far has been graded since (CORRECTNESS_r16.json).
+PLAN_CHANGED_KEYS: tuple[str, ...] = ()
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _last_graded() -> dict[str, int]:
+    """key -> last round with any driver row, from the committed
+    CORRECTNESS_r<N>.json history."""
+    last: dict[str, int] = {}
+    for path in glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json")):
+        rnd = int(re.search(r"r(\d+)\.json$", path).group(1))
+        with open(path) as fh:
+            for key in json.load(fh):
+                last[key] = max(last.get(key, 0), rnd)
+    return last
+
+
+@functools.cache
+def driver_priority() -> tuple[str, ...]:
+    """The next driver window, derived from the grading history."""
+    from bristle_spark import queries  # noqa: F401  (populates _REGISTRY)
+
+    graded = _last_graded()
+    oracle = [k for k, spec in _REGISTRY.items() if spec.oracle is not None]
+    never = [k for k in oracle if k not in graded]
+    stalest = sorted((k for k in oracle if k in graded), key=graded.__getitem__)
+    window = dict.fromkeys([*never, *PLAN_CHANGED_KEYS, *stalest])
+    return tuple(window)[:DRIVER_WINDOW]
 
 
 def all_specs() -> dict[str, QuerySpec]:
     """Import all query modules (side-effect registration) and return the registry.
 
-    The returned dict is ordered: ``DRIVER_PRIORITY`` keys first (in that
-    order), then every remaining registration in module-import order.
+    The returned dict is ordered: ``driver_priority()`` keys first (in
+    that order), then every remaining registration in module-import order.
     """
     from bristle_spark import queries  # noqa: F401  (populates _REGISTRY)
 
-    ordered: dict[str, QuerySpec] = {}
-    for name in DRIVER_PRIORITY:
-        if name in _REGISTRY:
-            ordered[name] = _REGISTRY[name]
+    ordered = {name: _REGISTRY[name] for name in driver_priority()}
     for name, spec in _REGISTRY.items():
-        if name not in ordered:
-            ordered[name] = spec
+        ordered.setdefault(name, spec)
     return ordered
 
 

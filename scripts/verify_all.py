@@ -66,7 +66,6 @@ SUITE_WEIGHTS = {
     "test_maintenance.py": 16,
     "test_bpe.py": 16,
     "test_plans.py": 15,
-    "test_socket_service.py": 11,
     "test_stateful_and_skew.py": 10,
     "test_funnel_single_propagation.py": 9,
     "test_stream_ingest.py": 8,

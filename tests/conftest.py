@@ -129,7 +129,6 @@ SLOW_MODULES = {
     "test_cli.py",
     "test_grpc_transport.py",
     "test_grpc_tls.py",
-    "test_socket_service.py",
     "test_server_reload.py",
     "test_maintenance.py",
     "test_pca_project.py",
@@ -142,7 +141,6 @@ SLOW_MODULES = {
     "test_h2_priority.py",
     "test_metrics.py",
     "test_backoff.py",
-    "test_socket_service.py",
     # registry-wide SWEEPS (one plan/robustness probe per key, ~300
     # params each): valuable, but the per-key pins in test_plans.py and
     # the full batch oracle parity already gate the fast tier

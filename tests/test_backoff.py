@@ -9,8 +9,8 @@ busy-loops (client/client.go:158-164; SURVEY §8.7 quirk). This repo
 implements both halves with the *intended* semantics: the services can
 emit the advisory alongside a TOO_MANY_IN_FLIGHT_BATCHES admission
 rejection (``backoff_ms`` knob, default off = reference behavior), and
-every client (socket, gRPC, the JSON forwarder through them) defers
-sends of the listed types with a correct non-negative wait."""
+the gRPC client (and the JSON forwarder through it) defers sends of the
+listed types with a correct non-negative wait."""
 
 from __future__ import annotations
 
@@ -24,12 +24,9 @@ from bristle_spark.ingest.fixtures import (
     example_binding,
     example_descriptor_set,
 )
+from bristle_spark.ingest.grpc_transport import GrpcIngestClient, GrpcIngestService
 from bristle_spark.ingest.server import IngestServer
-from bristle_spark.ingest.service import (
-    ClientBackoff,
-    IngestSocketClient,
-    IngestSocketService,
-)
+from bristle_spark.ingest.service import ClientBackoff
 
 
 # ------------------------------------------------------------ unit level
@@ -104,33 +101,12 @@ def _body(i: int) -> bytes:
     return encode_example_row(name=f"bo_{i}", value=i)
 
 
-def test_socket_service_emits_backoff_and_client_defers(spark, example_server):
-    """Admission rejection with backoff_ms set sends the advisory; the
-    client's next send of that type defers by the remaining window."""
-    with IngestSocketService(
-        example_server, max_in_flight=0, backoff_ms=400
-    ) as service:
-        with IngestSocketClient("127.0.0.1", service.port) as client:
-            t0 = time.monotonic()
-            assert (
-                client.write_batch([_body(0)], type_name="ExampleMessage")
-                == svc.TOO_MANY_IN_FLIGHT_BATCHES
-            )
-            # the advisory rode in with (or right behind) the ack; pull
-            # it off the wire via the next call's receive loop
-            r2 = client.write_batch([_body(1)], type_name="ExampleMessage")
-            elapsed = time.monotonic() - t0
-            assert r2 == svc.TOO_MANY_IN_FLIGHT_BATCHES
-            assert client.backoff.until_ms > 0
-            assert elapsed >= 0.25  # deferred (400ms window minus slack)
-
-
-def test_backoff_scoped_to_listed_type_socket(spark, example_server):
+def test_backoff_scoped_to_listed_type(spark, example_server):
     """An advisory naming one type does not defer sends of another."""
-    with IngestSocketService(
+    with GrpcIngestService(
         example_server, max_in_flight=0, backoff_ms=10_000
     ) as service:
-        with IngestSocketClient("127.0.0.1", service.port) as client:
+        with GrpcIngestClient("127.0.0.1", service.port) as client:
             client.write_batch([_body(0)], type_name="ExampleMessage")
             # drain the advisory deterministically
             while client.backoff.until_ms == 0:
@@ -145,11 +121,8 @@ def test_backoff_scoped_to_listed_type_socket(spark, example_server):
 
 
 def test_grpc_client_defers_on_backoff(spark, example_server):
-    from bristle_spark.ingest.grpc_transport import (
-        GrpcIngestClient,
-        GrpcIngestService,
-    )
-
+    """Admission rejection with backoff_ms set sends the advisory; the
+    client's next send of that type defers by the remaining window."""
     with GrpcIngestService(
         example_server, max_in_flight=0, backoff_ms=400
     ) as service:
@@ -159,11 +132,13 @@ def test_grpc_client_defers_on_backoff(spark, example_server):
                 client.write_batch([_body(0)], type_name="ExampleMessage")
                 == svc.TOO_MANY_IN_FLIGHT_BATCHES
             )
+            # the advisory rode in with (or right behind) the ack; pull
+            # it off the wire via the next call's receive loop
             r2 = client.write_batch([_body(1)], type_name="ExampleMessage")
             elapsed = time.monotonic() - t0
             assert r2 == svc.TOO_MANY_IN_FLIGHT_BATCHES
             assert client.backoff.until_ms > 0
-            assert elapsed >= 0.25
+            assert elapsed >= 0.25  # deferred (400ms window minus slack)
 
 
 def test_forwarder_defers_on_backoff(spark, example_server):
@@ -173,10 +148,10 @@ def test_forwarder_defers_on_backoff(spark, example_server):
     from bristle_spark.ingest.forwarder import JsonForwarder
 
     line = json.dumps({"name": "fw", "value": 1})
-    with IngestSocketService(
+    with GrpcIngestService(
         example_server, max_in_flight=0, backoff_ms=500
     ) as service:
-        with IngestSocketClient("127.0.0.1", service.port) as client:
+        with GrpcIngestClient("127.0.0.1", service.port) as client:
             fw = JsonForwarder(client, example_binding(), max_buffer=1)
             t0 = time.monotonic()
             fw.feed(line)  # flush #1: TOO_MANY + advisory
@@ -190,8 +165,8 @@ def test_forwarder_defers_on_backoff(spark, example_server):
 def test_backoff_off_by_default(spark, example_server):
     """backoff_ms=0 (the default) reproduces the reference server's
     behavior exactly: no advisory is ever emitted."""
-    with IngestSocketService(example_server, max_in_flight=0) as service:
-        with IngestSocketClient("127.0.0.1", service.port) as client:
+    with GrpcIngestService(example_server, max_in_flight=0) as service:
+        with GrpcIngestClient("127.0.0.1", service.port) as client:
             client.write_batch([_body(0)], type_name="ExampleMessage")
             client.write_batch([_body(1)], type_name="ExampleMessage")
             assert client.backoff.until_ms == 0

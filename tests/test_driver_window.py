@@ -11,11 +11,12 @@ instead of pinning one round's hand-built list:
    oracle-backed registry: no oracle-backed key OUTSIDE the window may
    be strictly staler than a non-priority key INSIDE it.
 
-Staleness is computed from the committed CORRECTNESS history, so the
-suite fails the moment a new CORRECTNESS file lands and the pinned
-window no longer satisfies the policy — the next rotation is forced,
-not optional. Keys rotated out keep local oracle-parity coverage via
-test_oracle_parity.py and scripts/verify_all.py.
+registry.driver_priority() derives the window from the committed
+CORRECTNESS history, so a new CORRECTNESS file rotates it with no hand
+edit. These tests recompute staleness from the same files on their
+own, so a derivation that drifts from the policy fails here. Keys
+rotated out keep local oracle-parity coverage via test_oracle_parity.py
+and scripts/verify_all.py.
 """
 
 from __future__ import annotations
@@ -56,16 +57,16 @@ def last_graded():
 
 
 def test_priority_list_is_exactly_fifty():
-    assert len(registry.DRIVER_PRIORITY) == 50
-    assert len(set(registry.DRIVER_PRIORITY)) == 50
+    assert len(registry.driver_priority()) == 50
+    assert len(set(registry.driver_priority())) == 50
 
 
 def test_first_fifty_is_exactly_the_priority_list(specs):
-    assert list(specs)[:50] == list(registry.DRIVER_PRIORITY)
+    assert list(specs)[:50] == list(registry.driver_priority())
 
 
 def test_priority_keys_all_registered(specs):
-    assert [k for k in registry.DRIVER_PRIORITY if k not in specs] == []
+    assert [k for k in registry.driver_priority() if k not in specs] == []
 
 
 def test_never_graded_keys_lead_the_window(specs, last_graded):
@@ -80,13 +81,13 @@ def test_never_graded_keys_lead_the_window(specs, last_graded):
         k for k, spec in specs.items()
         if k not in last_graded and spec.oracle is not None
     ]
-    window = set(registry.DRIVER_PRIORITY)
+    window = set(registry.driver_priority())
     missing = [k for k in never if k not in window]
     assert missing == [], f"never-driver-graded keys outside the window: {missing}"
     # and they sit at the very front: the driver grades in order, so an
     # early abort still covers the highest-value keys
     n = len(never)
-    assert set(registry.DRIVER_PRIORITY[:n]) == set(never)
+    assert set(registry.driver_priority()[:n]) == set(never)
 
 
 def test_plan_changed_keys_in_window(specs, last_graded):
@@ -94,7 +95,7 @@ def test_plan_changed_keys_in_window(specs, last_graded):
     not evidence about the current plan — re-grade next window."""
     for key in registry.PLAN_CHANGED_KEYS:
         assert key in specs, f"PLAN_CHANGED_KEYS names unknown key {key}"
-        assert key in registry.DRIVER_PRIORITY, (
+        assert key in registry.driver_priority(), (
             f"{key} changed after its last driver grade but is not in "
             f"the next window"
         )
@@ -105,7 +106,7 @@ def test_window_drains_oldest_first(specs, last_graded):
     OUTSIDE the window may be strictly staler than a non-priority key
     INSIDE it. (Rows-only keys are exempt: the window is reserved for
     hash-gradable slots — see test_every_window_key_is_oracle_backed.)"""
-    window = set(registry.DRIVER_PRIORITY)
+    window = set(registry.driver_priority())
     priority = set(registry.PLAN_CHANGED_KEYS)
     inside_rounds = [
         last_graded[k]
@@ -143,7 +144,7 @@ def test_every_window_key_is_oracle_backed(specs):
     in the window is a deliberate, visible choice: it must be listed in
     WINDOW_ROWS_ONLY_EXEMPT above with the rationale, and only keys
     with zero driver history qualify (one run each, ever)."""
-    rows_only = [k for k in registry.DRIVER_PRIORITY if specs[k].oracle is None]
+    rows_only = [k for k in registry.driver_priority() if specs[k].oracle is None]
     undeclared = [k for k in rows_only if k not in WINDOW_ROWS_ONLY_EXEMPT]
     assert undeclared == [], (
         f"undeclared rows-only keys in the window: {undeclared}"
@@ -163,26 +164,9 @@ def test_rows_only_exemption_is_first_run_only(specs, last_graded):
         )
 
 
-def test_beyond_window_queries_still_registered(specs):
-    """Rotated-out queries stay registered (just past the driver
-    window) — spot-checks the r10 window plus a spread of older keys."""
-    ordered = list(specs)
-    for key in ("r_string_funcs", "r_date_funcs", "r_percentile_disc",
-                "r_window_funnel", "l_dedup_band_stats", "l_domain_cap",
-                "r_year_over_year", "r_cohort_ltv", "l_tokenizer_fertility",
-                "l_skipgram_cooccurrence", "r_rfm_segments",
-                "r_seasonality_index", "r_time_to_convert",
-                "l_vocab_coverage", "l_js_divergence",
-                "l_sessionize", "r_agg_collect", "r_arg_max", "r_asof_join",
-                "r_cube", "r_funnel", "r_grouping_sets", "r_pivot",
-                "r_range_join", "r_skew_salted_agg", "r_window_lag",
-                "l_fingerprint", "l_pagerank",
-                # r14-window keys rotated out this round
-                "r_benjamini_hochberg", "r_bollinger_bands", "r_survival_km",
-                "l_sq8_quantize_error", "r_srm_check", "r_peak_detection",
-                "r_rolling_corr", "r_power_analysis", "r_allen_intervals",
-                "l_temperature_mix", "r_did_estimator", "r_did_pretrend",
-                "r_geo_distance", "r_approx_distinct", "r_filter_predicates",
-                "r_join_inner", "t_project_rename"):
-        assert key in specs
-        assert ordered.index(key) >= 50, key
+def test_beyond_window_queries_still_registered():
+    """Rotated-out queries stay registered, just past the driver window:
+    every registered key appears in queries() exactly once."""
+    from bristle_spark.registry import _REGISTRY, queries
+
+    assert sorted(queries()) == sorted(_REGISTRY)

@@ -1,7 +1,7 @@
 """Live JSON forwarder (ingest/forwarder.py): the reference's
-bristle-forward-json producer driving the TCP front door. Pins (a) the
+bristle-forward-json producer driving the gRPC front door. Pins (a) the
 protojson→wire encoding round-trips through the repo's own decoder,
-(b) an end-to-end socket run with client-side batching and a skipped
+(b) an end-to-end gRPC run with client-side batching and a skipped
 malformed line, and (c) equivalence of the forwarded sink rows with the
 Spark-side JSON path (json_source) on the same lines."""
 
@@ -23,8 +23,8 @@ from bristle_spark.ingest.forwarder import (
     encode_json_record,
     forward_json_lines,
 )
+from bristle_spark.ingest.grpc_transport import GrpcIngestService
 from bristle_spark.ingest.server import IngestServer
-from bristle_spark.ingest.service import IngestSocketClient, IngestSocketService
 
 
 def test_encoded_record_roundtrips():
@@ -102,7 +102,7 @@ def test_forwarder_end_to_end(spark, finnhub_server):
     server = finnhub_server
     binding = server.registry.for_type("FinnhubTrade")
     lines = [_trade_line(i) for i in range(5)] + ["{not json"]
-    with IngestSocketService(server) as service:
+    with GrpcIngestService(server) as service:
         stats = forward_json_lines(
             lines, "127.0.0.1", service.port, binding,
             max_buffer=2, type_name="FinnhubTrade"
@@ -125,7 +125,7 @@ def test_forwarder_end_to_end(spark, finnhub_server):
 
 
 def test_forwarder_matches_spark_json_path(spark, finnhub_server):
-    """The socket-forwarded rows must equal what the distributed JSON
+    """The gRPC-forwarded rows must equal what the distributed JSON
     source (D16's Spark path) derives from the same lines — the live
     producer and the file path are two doors into one decode."""
     from bristle_spark.ingest.json_source import ingest_json_lines
@@ -133,7 +133,7 @@ def test_forwarder_matches_spark_json_path(spark, finnhub_server):
     server = finnhub_server
     binding = server.registry.for_type("FinnhubTrade")
     lines = [_trade_line(i) for i in range(3)]
-    with IngestSocketService(server) as service:
+    with GrpcIngestService(server) as service:
         forward_json_lines(
             lines, "127.0.0.1", service.port, binding, type_name="FinnhubTrade"
         )
@@ -215,7 +215,7 @@ def test_buffer_larger_than_server_batch_limit_still_lands(spark, finnhub_server
     server = finnhub_server
     binding = server.registry.for_type("FinnhubTrade")
     lines = [_trade_line(i) for i in range(30)]
-    with IngestSocketService(server, max_batch_len=8) as service:
+    with GrpcIngestService(server, max_batch_len=8) as service:
         stats = forward_json_lines(
             lines, "127.0.0.1", service.port, binding,
             max_buffer=100_000, type_name="FinnhubTrade",
@@ -239,7 +239,7 @@ def test_default_sizes_interoperate_with_default_server(spark, finnhub_server):
     binding = server.registry.for_type("FinnhubTrade")
     n = 2_500
     lines = [_trade_line(i) for i in range(n)]
-    with IngestSocketService(server) as service:
+    with GrpcIngestService(server) as service:
         stats = forward_json_lines(
             lines, "127.0.0.1", service.port, binding, type_name="FinnhubTrade"
         )

@@ -80,7 +80,7 @@ def test_tls_end_to_end_three_fixtures(spark, tls_server):
     """The three-fixture end-to-end over TLS: streaming bidi RPC with a
     CA-verifying client (the production shape), then unary WriteBatch on
     the same TLS listener."""
-    from tests.test_socket_service import _binance_body, _finnhub_body
+    from tests.test_grpc_transport import _binance_body, _finnhub_body
 
     server, ctx, cert = tls_server
     with GrpcIngestService(server, tls_context=ctx) as service:

@@ -1,11 +1,10 @@
 """End-to-end gRPC ingest: the HTTP/2-gRPC front door
-(ingest/grpc_transport.py) feeding the same checkpointed streaming sink
-as the TCP service — D1 transport literalism closed without grpcio. A
-live client speaks the real gRPC-over-HTTP/2 wire protocol (connection
-preface, SETTINGS, HPACK-compressed headers, 5-byte length-prefixed
-gRPC messages in DATA frames, grpc-status trailers) against the
-reference's Streaming bidi RPC semantics (ingest_service.go:184-234,
-bristle.proto:117-123)."""
+(ingest/grpc_transport.py) feeding the checkpointed streaming sink —
+D1 transport literalism closed without grpcio. A live client speaks
+the real gRPC-over-HTTP/2 wire protocol (connection preface, SETTINGS,
+HPACK-compressed headers, 5-byte length-prefixed gRPC messages in DATA
+frames, grpc-status trailers) against the reference's Streaming bidi
+RPC semantics (ingest_service.go:184-234, bristle.proto:117-123)."""
 
 from __future__ import annotations
 
@@ -19,6 +18,7 @@ import pytest
 from bristle_spark.ingest import grpc_transport as gt
 from bristle_spark.ingest import h2
 from bristle_spark.ingest import service as svc
+from bristle_spark.ingest import wire
 from bristle_spark.ingest.fixtures import (
     binance_ddl_columns,
     binance_descriptor_set,
@@ -65,6 +65,36 @@ def three_table_server(spark, tmp_path):
     yield IngestServer(spark, str(cfg_path), str(tmp_path / "data"))
 
 
+def _binance_body(i: int) -> bytes:
+    return wire.encode_message(
+        [
+            (1, "string", "trade", False),
+            (2, "uint64", 1_700_000_000_000 + i, False),
+            (3, "string", "BTCUSDT", False),
+            (4, "uint64", 1000 + i, False),
+            (5, "double", 42000.5 + i, False),
+            (6, "double", 0.25, False),
+            (7, "uint64", 1, False),
+            (8, "uint64", 2, False),
+            (9, "uint64", 1_700_000_000_000 + i, False),
+            (10, "bool", i % 2 == 0, False),
+            (11, "bool", True, False),
+        ]
+    )
+
+
+def _finnhub_body(i: int) -> bytes:
+    return wire.encode_message(
+        [
+            (1, "string", "AAPL", False),
+            (2, "double", 180.0 + i, False),
+            (3, "uint64", 1_700_000_000_000 + i, False),
+            (4, "double", 10.0, False),
+            (5, "string", ["1", "12"], True),
+        ]
+    )
+
+
 # ---------------------------------------------------------- framing unit
 
 
@@ -89,11 +119,16 @@ def test_grpc_split_partial_and_compressed_flag():
 
 
 def test_grpc_end_to_end_three_fixtures(spark, three_table_server):
-    from tests.test_socket_service import _binance_body, _finnhub_body
-
+    """One live Streaming RPC lands all three fixtures. A config reload
+    (same bindings) between batches keeps the session's type ids valid
+    and drains without replay, and batches acked OK but not yet drained
+    survive a crash: a FRESH server over the same data root drains them
+    exactly once (where the reference drops buffered batches on writer
+    failure, clickhouse_table_writer.go:100-104)."""
     server = three_table_server
     with GrpcIngestService(server) as service:
         with GrpcIngestClient("127.0.0.1", service.port) as client:
+            # register-type handshake -> short id (ingest_service.go:196-217)
             ex_id = client.register_type("ExampleMessage")
             assert ex_id == 1
 
@@ -110,7 +145,10 @@ def test_grpc_end_to_end_three_fixtures(spark, three_table_server):
                 for i in range(3)
             ]
             assert client.write_batch(day1, type_id=ex_id) == svc.OK
+            server.pump()
+            assert server.reload() is True
             assert client.write_batch(day2, type_id=ex_id) == svc.OK
+            server.pump()  # the swapped writer resumes the checkpoint: no replay
             assert (
                 client.write_batch([_binance_body(i) for i in range(5)], type_name="Trade")
                 == svc.OK
@@ -130,10 +168,15 @@ def test_grpc_end_to_end_three_fixtures(spark, three_table_server):
             )
             assert client.write_batch([b"x"], type_id=999) == svc.UNK_MESSAGE
 
-    server.pump()
+    # no further pump on the original server: simulate a crash after the acks
+    fresh = IngestServer(spark, server.config_path, server.data_root)
+    fresh.pump()
     sink_root = os.path.join(server.data_root, "sink")
     ex = spark.read.parquet(os.path.join(sink_root, "default__example_table"))
-    assert ex.count() == 7
+    assert sorted(r["name"] for r in ex.collect()) == sorted(
+        [f"d1_{i}" for i in range(4)] + [f"d2_{i}" for i in range(3)]
+    )
+    # day-partitioned layout (ClickHouse PARTITION BY toYYYYMMDD analog)
     days = {
         d
         for d in os.listdir(os.path.join(sink_root, "default__example_table"))
@@ -142,41 +185,14 @@ def test_grpc_end_to_end_three_fixtures(spark, three_table_server):
     assert len(days) == 2
     bn = spark.read.parquet(os.path.join(sink_root, "binance__trade_events"))
     assert bn.count() == 5
+    assert {r["symbol"] for r in bn.collect()} == {"BTCUSDT"}
     fh = spark.read.parquet(os.path.join(sink_root, "finnhub__trades"))
+    assert fh.count() == 2
     assert fh.collect()[0]["tradeConditions"] == ["1", "12"]
 
     # exactly-once across a re-pump
-    server.pump()
+    fresh.pump()
     assert spark.read.parquet(os.path.join(sink_root, "default__example_table")).count() == 7
-
-
-def test_grpc_and_socket_land_identical_payloads(spark, three_table_server, tmp_path):
-    """Transport equivalence: the same batch sent through the gRPC front
-    door and through the TCP front door lands byte-identical payload
-    rows (process_batch is shared; only the wire differs)."""
-    from bristle_spark.ingest.service import IngestSocketClient, IngestSocketService
-
-    server = three_table_server
-    bodies = [
-        encode_example_row(name=f"eq_{i}", type_code=1, ts=(1_700_000_000, 0), value=i)
-        for i in range(6)
-    ]
-    with GrpcIngestService(server) as service:
-        with GrpcIngestClient("127.0.0.1", service.port) as client:
-            tid = client.register_type("ExampleMessage")
-            assert client.write_batch(bodies, type_id=tid) == svc.OK
-    with IngestSocketService(server) as service:
-        with IngestSocketClient("127.0.0.1", service.port) as client:
-            tid = client.register_type("ExampleMessage")
-            assert client.write_batch(bodies, type_id=tid) == svc.OK
-
-    payload_dir = os.path.join(server.data_root, "payloads", "default__example_table")
-    files = sorted(os.listdir(payload_dir))
-    assert len(files) == 2
-    import pyarrow.parquet as pq
-
-    first, second = (pq.read_table(os.path.join(payload_dir, f)) for f in files)
-    assert first.to_pydict() == second.to_pydict()
 
 
 def test_grpc_batch_limits_and_backpressure(spark, three_table_server):
@@ -364,6 +380,29 @@ def test_grpc_wire_is_real_http2(spark, three_table_server):
             assert client.register_type("ExampleMessage") == 1
 
 
+def test_h2_sockets_disable_nagle():
+    """Both ends of an h2 connection run with TCP_NODELAY, as stock gRPC
+    does. Each side sends a control frame and then its payload in
+    separate writes; with Nagle on, the second write waits for the
+    peer's delayed ACK and every acked batch stalled for tens of
+    milliseconds while both processes sat idle."""
+    accepted = []
+    # no IngestServer: the register-type handshake never touches it
+    with GrpcIngestService(None) as service:
+        serve = service._serve_connection
+
+        def spy(conn):
+            accepted.append(conn)
+            return serve(conn)
+
+        service._serve_connection = spy
+        with GrpcIngestClient("127.0.0.1", service.port) as client:
+            assert client.register_type("ExampleMessage") == 1
+            assert client.conn.getsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY)
+            assert len(accepted) == 1
+            assert accepted[0].getsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY)
+
+
 # -------------------------------------------------- unary WriteBatch RPC
 
 
@@ -371,8 +410,6 @@ def test_unary_write_batch_three_fixtures(spark, three_table_server):
     """The reference's OTHER public RPC (bristle.proto:119,
     ingest_service.go:109-120): one unary WriteBatch call carrying
     payloads for all three fixture tables lands them all."""
-    from tests.test_socket_service import _binance_body, _finnhub_body
-
     server = three_table_server
     with GrpcIngestService(server) as service:
         ack, dropped = gt.grpc_write_batch_unary(
@@ -446,12 +483,10 @@ def test_unary_empty_request_acks_zero(spark, three_table_server):
         assert gt.grpc_write_batch_unary("127.0.0.1", service.port, []) == (0, 0)
 
 
-def test_socket_unary_and_bidi_land_identical_payloads(spark, three_table_server):
-    """All THREE front doors — TCP socket, gRPC bidi Streaming, gRPC
-    unary WriteBatch — land byte-identical payload rows for the same
-    batch (process_batch is shared; only the wire differs)."""
-    from bristle_spark.ingest.service import IngestSocketClient, IngestSocketService
-
+def test_unary_and_bidi_land_identical_payloads(spark, three_table_server):
+    """Both public RPCs — bidi Streaming and unary WriteBatch — land
+    byte-identical payload rows for the same batch (process_batch is
+    shared; only the RPC shape differs)."""
     server = three_table_server
     bodies = [
         encode_example_row(name=f"tri_{i}", type_code=2, ts=(1_700_000_100, 0), value=i)
@@ -464,18 +499,14 @@ def test_socket_unary_and_bidi_land_identical_payloads(spark, three_table_server
         assert gt.grpc_write_batch_unary(
             "127.0.0.1", service.port, [("ExampleMessage", bodies)]
         ) == (1, 0)
-    with IngestSocketService(server) as service:
-        with IngestSocketClient("127.0.0.1", service.port) as client:
-            tid = client.register_type("ExampleMessage")
-            assert client.write_batch(bodies, type_id=tid) == svc.OK
 
     payload_dir = os.path.join(server.data_root, "payloads", "default__example_table")
     files = sorted(os.listdir(payload_dir))
-    assert len(files) == 3
+    assert len(files) == 2
     import pyarrow.parquet as pq
 
-    tables = [pq.read_table(os.path.join(payload_dir, f)).to_pydict() for f in files]
-    assert tables[0] == tables[1] == tables[2]
+    first, second = (pq.read_table(os.path.join(payload_dir, f)) for f in files)
+    assert first.to_pydict() == second.to_pydict()
 
 
 def test_unary_request_roundtrip_codec():

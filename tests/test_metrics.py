@@ -103,52 +103,6 @@ def test_debug_server_from_config():
 # ----------------------------------------------------- front-door deltas
 
 
-def test_socket_front_door_advances_counters(spark, tmp_path):
-    from bristle_spark.ingest.fixtures import (
-        encode_example_row,
-        example_binding,
-        example_descriptor_set,
-    )
-    from bristle_spark.ingest.server import IngestServer
-    from bristle_spark.ingest.service import IngestSocketClient, IngestSocketService
-
-    (tmp_path / "example.pb").write_bytes(example_descriptor_set())
-    cfg = {
-        "autobind": True,
-        "proto_descriptor_paths": ["example.pb"],
-        "tables": [
-            {
-                "name": "default.example_table",
-                "columns": [
-                    {"name": c.name, "type": c.ch_type, "default": c.default}
-                    for c in example_binding().sink_columns
-                ],
-            }
-        ],
-    }
-    (tmp_path / "config.json").write_text(json.dumps(cfg))
-    server = IngestServer(spark, str(tmp_path / "config.json"), str(tmp_path / "data"))
-
-    bodies = [encode_example_row(name=f"m_{i}", value=i) for i in range(5)]
-    ok0 = M.BATCHES.value("socket", "OK")
-    unk0 = M.BATCHES.value("socket", "UNK_MESSAGE")
-    rows0 = M.ROWS.value("default.example_table")
-    bytes0 = M.PAYLOAD_BYTES.value("default.example_table")
-    with IngestSocketService(server) as service:
-        with IngestSocketClient("127.0.0.1", service.port) as client:
-            assert client.write_batch(bodies, type_name="ExampleMessage") == svc.OK
-            assert (
-                client.write_batch([b"x"], type_name="no.such.Type")
-                == svc.UNK_MESSAGE
-            )
-    assert M.BATCHES.value("socket", "OK") == ok0 + 1
-    assert M.BATCHES.value("socket", "UNK_MESSAGE") == unk0 + 1
-    assert M.ROWS.value("default.example_table") == rows0 + 5
-    assert M.PAYLOAD_BYTES.value("default.example_table") == bytes0 + sum(
-        len(b) for b in bodies
-    )
-
-
 def test_grpc_front_door_advances_rpc_counters(spark, tmp_path):
     from bristle_spark.ingest.fixtures import (
         encode_example_row,
@@ -184,15 +138,30 @@ def test_grpc_front_door_advances_rpc_counters(spark, tmp_path):
     s_started0 = M.RPC_STARTED.value("Streaming")
     unary0 = M.BATCHES.value("grpc-unary", "OK")
     stream0 = M.BATCHES.value("grpc-streaming", "OK")
-    bodies = [encode_example_row(name="g", value=1)]
+    unk0 = M.BATCHES.value("grpc-streaming", "UNK_MESSAGE")
+    rows0 = M.ROWS.value("default.example_table")
+    bytes0 = M.PAYLOAD_BYTES.value("default.example_table")
+    unary_bodies = [encode_example_row(name="g", value=1)]
+    bodies = [encode_example_row(name=f"m_{i}", value=i) for i in range(5)]
     with GrpcIngestService(server) as service:
         assert grpc_write_batch_unary(
-            "127.0.0.1", service.port, [("ExampleMessage", bodies)]
+            "127.0.0.1", service.port, [("ExampleMessage", unary_bodies)]
         ) == (1, 0)
         with GrpcIngestClient("127.0.0.1", service.port) as client:
             assert client.write_batch(bodies, type_name="ExampleMessage") == svc.OK
+            assert (
+                client.write_batch([b"x"], type_name="no.such.Type")
+                == svc.UNK_MESSAGE
+            )
     assert M.RPC_STARTED.value("WriteBatch") == started0 + 1
     assert M.RPC_HANDLED.value("WriteBatch", "0") == handled0 + 1
     assert M.RPC_STARTED.value("Streaming") == s_started0 + 1
     assert M.BATCHES.value("grpc-unary", "OK") == unary0 + 1
     assert M.BATCHES.value("grpc-streaming", "OK") == stream0 + 1
+    assert M.BATCHES.value("grpc-streaming", "UNK_MESSAGE") == unk0 + 1
+    # durably landed rows and payload bytes, counted once per landing
+    landed = unary_bodies + bodies
+    assert M.ROWS.value("default.example_table") == rows0 + len(landed)
+    assert M.PAYLOAD_BYTES.value("default.example_table") == bytes0 + sum(
+        len(b) for b in landed
+    )

@@ -61,7 +61,7 @@ def test_stream_ingest_exactly_once(spark, tmp_path):
 
 
 def test_wire_journal_survives_server_restart(spark, tmp_path):
-    """The full practical shape of the D1 row (wire door -> durable
+    """The full practical shape of the D1 row (gRPC door -> durable
     journal -> readStream -> sink) across a PROCESS RESTART: batches
     acked by server generation 1 and drained mid-stream must not be
     re-landed by generation 2, and batches acked between the crash and
@@ -77,11 +77,11 @@ def test_wire_journal_survives_server_restart(spark, tmp_path):
         example_binding,
         example_descriptor_set,
     )
-    from bristle_spark.ingest.server import IngestServer
-    from bristle_spark.ingest.service import (
-        IngestSocketClient,
-        IngestSocketService,
+    from bristle_spark.ingest.grpc_transport import (
+        GrpcIngestClient,
+        GrpcIngestService,
     )
+    from bristle_spark.ingest.server import IngestServer
 
     (tmp_path / "example.pb").write_bytes(example_descriptor_set())
     cfg = {
@@ -113,8 +113,8 @@ def test_wire_journal_survives_server_restart(spark, tmp_path):
 
     # --- generation 1: ack two batches, drain ONE pump, then "crash"
     gen1 = IngestServer(spark, str(cfg_path), data_root)
-    with IngestSocketService(gen1) as service:
-        with IngestSocketClient("127.0.0.1", service.port) as client:
+    with GrpcIngestService(gen1) as service:
+        with GrpcIngestClient("127.0.0.1", service.port) as client:
             assert client.write_batch(rows("a", 4), type_name="ExampleMessage") == svc.OK
             gen1.pump()  # mid-stream drain: checkpoint now covers batch a
             assert client.write_batch(rows("b", 3), type_name="ExampleMessage") == svc.OK
@@ -123,8 +123,8 @@ def test_wire_journal_survives_server_restart(spark, tmp_path):
 
     # --- generation 2: fresh server object over the same durable state
     gen2 = IngestServer(spark, str(cfg_path), data_root)
-    with IngestSocketService(gen2) as service:
-        with IngestSocketClient("127.0.0.1", service.port) as client:
+    with GrpcIngestService(gen2) as service:
+        with GrpcIngestClient("127.0.0.1", service.port) as client:
             assert client.write_batch(rows("c", 2), type_name="ExampleMessage") == svc.OK
     gen2.pump()
 

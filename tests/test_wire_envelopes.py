@@ -1,11 +1,9 @@
-"""Pure-codec round-trips for the socket protocol envelopes
+"""Pure-codec round-trips for the ingest protocol envelopes
 (ingest/service.py): StreamingClientMessage / StreamingServerMessage
 encode/decode built on the spec-driven wire module, no Spark, no socket.
 """
 
 from __future__ import annotations
-
-import io
 
 import pytest
 
@@ -56,23 +54,6 @@ def test_server_messages_roundtrip():
     assert (kind, body) == ("write_batch_result", {"id": 3, "result": svc.OK})
     kind, body = svc.decode_server_message(svc._encode_identify("a.B", 5))
     assert (kind, body) == ("identify_message_type", {"type": "a.B", "id": 5})
-
-
-def test_stream_framing_roundtrip():
-    envs = [svc.encode_register_type("t"), svc.encode_write_batch(1, [b"q"], type_id=1)]
-    stream = b"".join(svc.frame_envelope(e) for e in envs)
-    rf = io.BufferedReader(io.BytesIO(stream))
-    assert svc.read_envelope(rf) == envs[0]
-    assert svc.read_envelope(rf) == envs[1]
-    assert svc.read_envelope(rf) is None  # clean EOF at a boundary
-
-
-def test_truncated_stream_raises():
-    env = svc.encode_write_batch(1, [b"payload"], type_name="t")
-    framed = svc.frame_envelope(env)
-    rf = io.BufferedReader(io.BytesIO(framed[: len(framed) // 2]))
-    with pytest.raises(ConnectionError):
-        svc.read_envelope(rf)
 
 
 def test_empty_client_message_rejected():
